@@ -5,9 +5,12 @@
 
   1. cores: |Nε(L)| ≥ MinLns, where Nε includes L itself ([T] Defn 6) —
      one hash aggregation over the symmetrized pair list.
-  2. clusters = connected components of the core-core subgraph, via
-     iterative min-label propagation (each round one join + one agg;
-     localCheckpoint every few rounds to truncate lineage).
+  2. clusters = connected components of the core-core subgraph, in ONE
+     partition-local pass: core pairs keyed by the venue of a_seg, a
+     numpy union-find per partition (kernels.component_labels), then the
+     contraction loop over only the residual graph that links the local
+     labels of nodes seen by several partitions (skipped when no ε-pair
+     crosses venues, so that graph is empty).
   3. border segments attach to the minimum adjacent core label
      (deterministic; the paper's queue order is first-come-first-served,
      which is not reproducible in parallel — pinned to min).
@@ -22,10 +25,17 @@ absent (the reference marks them noise and drops them from clusters).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from imc.config import IMCParams
+from imc.config import VENUE_STRIDE, IMCParams
+from imc.kernels import component_labels
+from imc.segments import SEG_ID_STRIDE
+
+# rows per output batch of the partition-local components kernel
+_LABEL_ROWS = 1 << 16
 
 
 def symmetrize(eps_pairs: DataFrame) -> DataFrame:
@@ -63,10 +73,11 @@ def _connected_components(edges: DataFrame, nodes: DataFrame,
     Terminates when the contracted graph is empty: a path graph halves
     per round ⇒ O(log n) rounds.
 
-    edges: symmetric (src, dst) over core segments; nodes: (seg_id).
-    Returns (seg_id, comp) with comp = min seg_id in the component."""
-    labels = (nodes.select(F.col("seg_id"), F.col("seg_id").alias("comp"))
-              .localCheckpoint(eager=True))
+    edges: symmetric (src, dst); nodes: (seg_id). Returns (seg_id, comp)
+    with comp = min seg_id in the component. dbscan runs it on the
+    residual graph of core_components only."""
+    # lazy: the first round's label join checkpoints it
+    labels = nodes.select(F.col("seg_id"), F.col("seg_id").alias("comp"))
     g = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
          .filter(F.col("a") != F.col("b"))
          .localCheckpoint(eager=True))
@@ -102,6 +113,56 @@ def _connected_components(edges: DataFrame, nodes: DataFrame,
     return labels
 
 
+def _local_components(batches):
+    """mapInPandas body: one partition's (a_seg, b_seg) batches streamed
+    through the numpy union-find → (seg_id, comp = min seg_id of its
+    component among this partition's edges)."""
+    ids, labels = component_labels(
+        (pdf["a_seg"].to_numpy(np.int64), pdf["b_seg"].to_numpy(np.int64))
+        for pdf in batches)
+    for lo in range(0, ids.size, _LABEL_ROWS):
+        yield pd.DataFrame({"seg_id": ids[lo:lo + _LABEL_ROWS],
+                            "comp": labels[lo:lo + _LABEL_ROWS]})
+
+
+def core_components(core_pairs: DataFrame, core_ids: DataFrame) -> DataFrame:
+    """(seg_id, comp) for every core segment, comp = min seg_id of its
+    connected component in the core ε-graph.
+
+    One partition-local pass replaces a driver loop of join + agg rounds
+    (each round several Spark jobs): pairs are keyed by the venue of
+    a_seg and repartitioned on it, and each partition's edges stream
+    through kernels.component_labels inside mapInPandas. ε-pairs may
+    cross venues, so a node can be met by several partitions and carry
+    one local label from each; linking those labels gives the RESIDUAL
+    graph, and _connected_components contracts it. Without cross-venue
+    pairs the residual is empty and the local labels are final. Cores
+    with no core neighbour are their own component."""
+    v = F.expr(f"a_seg div {SEG_ID_STRIDE * VENUE_STRIDE}")
+    local = (core_pairs.select("a_seg", "b_seg")
+             .repartition(v)
+             .mapInPandas(_local_components, "seg_id long, comp long")
+             .localCheckpoint(eager=True))
+    first = F.min("comp").over(Window.partitionBy("seg_id"))
+    links = (local.select("comp", first.alias("first"))
+             .filter(F.col("comp") != F.col("first")))
+    residual = (links.select(F.col("comp").alias("src"), F.col("first").alias("dst"))
+                .unionByName(links.select(F.col("first").alias("src"),
+                                          F.col("comp").alias("dst")))
+                .localCheckpoint(eager=True))
+    resolved = local  # one row per seg_id unless the residual has edges
+    if not residual.isEmpty():
+        merged = _connected_components(
+            residual, residual.select(F.col("src").alias("seg_id")).distinct())
+        resolved = (local.join(merged.select(F.col("seg_id").alias("comp"),
+                                             F.col("comp").alias("_root")),
+                               "comp", "left")
+                    .groupBy("seg_id")
+                    .agg(F.min(F.coalesce("_root", "comp")).alias("comp")))
+    return (core_ids.join(resolved, "seg_id", "left")
+            .select("seg_id", F.coalesce("comp", "seg_id").alias("comp")))
+
+
 def rank_components(comps: DataFrame) -> DataFrame:
     """(comp) → (comp, cluster_id): dense canonical ids 0..n−1 in
     ascending comp order WITHOUT a global single-partition window
@@ -115,8 +176,6 @@ def rank_components(comps: DataFrame) -> DataFrame:
     (running sum over ONE ROW PER VENUE — the only single-task step,
     venue-count-sized) reproduces the exact same total order, hence
     bit-identical cluster ids (oracle-gated via imc_assignments)."""
-    from imc.config import VENUE_STRIDE
-    from imc.segments import SEG_ID_STRIDE
     v = F.expr(f"comp div {SEG_ID_STRIDE * VENUE_STRIDE}")
     wv = Window.partitionBy("_v").orderBy("comp")
     ranked = (comps.withColumn("_v", v)
@@ -144,12 +203,12 @@ def dbscan(segments: DataFrame, eps_pairs: DataFrame,
     cores = core_segments(segments, eps_pairs, params).filter("is_core")
     core_ids = cores.select("seg_id").localCheckpoint(eager=True)
 
-    sym = symmetrize(eps_pairs)
-    core_edges = (sym
-                  .join(core_ids.withColumnRenamed("seg_id", "src"), "src", "left_semi")
-                  .join(core_ids.withColumnRenamed("seg_id", "dst"), "dst", "left_semi"))
+    core_pairs = (eps_pairs
+                  .join(core_ids.withColumnRenamed("seg_id", "a_seg"), "a_seg", "left_semi")
+                  .join(core_ids.withColumnRenamed("seg_id", "b_seg"), "b_seg", "left_semi"))
+    comp = core_components(core_pairs, core_ids)
 
-    comp = _connected_components(core_edges, core_ids)
+    sym = symmetrize(eps_pairs)
 
     # border attachment: non-core neighbors of cores take min adjacent comp
     border = (sym

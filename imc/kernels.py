@@ -19,6 +19,9 @@ Pinned conventions (documented deviations / disambiguations, SURVEY.md §0):
 
 Everything operates on float64 with a fixed reduction order for
 determinism (SURVEY.md §7.3-1).
+
+component_labels is the one graph kernel: the streaming union-find that
+DBSCAN runs inside each partition over the core ε-graph ([T] §4.2).
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ __all__ = [
     "sweep_representative",
     "log2s",
     "log2f",
+    "component_labels",
 ]
 
 _EPS = 1e-12
@@ -612,3 +616,77 @@ def sweep_representative(segs: np.ndarray, min_lns: int, gamma: float,
     if with_spread:
         return np.stack([bx, by, arr[:, 2]], axis=1)
     return np.stack([bx, by], axis=1)
+
+
+def _pointer_jump(parent: np.ndarray) -> np.ndarray:
+    """parent ← parent[parent] until every node points at its root."""
+    while True:
+        grand = parent[parent]
+        if np.array_equal(grand, parent):
+            return parent
+        parent = grand
+
+
+def _union_edges(parent: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Merge the components joined by edges (a[i], b[i]) — indices into
+    `parent`, a star forest (every node points at its root) on entry and
+    on return. Each round hooks the larger root of every open edge onto
+    the smallest root it meets, then pointer-jumps. A parent is never
+    larger than its child, so every root is its tree's minimum, and each
+    round removes at least one root. An edge whose ends share a root
+    stays closed, so it leaves the working set."""
+    while a.size:
+        ra, rb = parent[a], parent[b]
+        open_ = ra != rb
+        if not open_.any():
+            break
+        a, b, ra, rb = a[open_], b[open_], ra[open_], rb[open_]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        parent = _pointer_jump(parent)
+    return parent
+
+
+def component_labels(edge_batches, min_flush: int = 1 << 16):
+    """Connected components of an undirected graph that arrives as a
+    stream of edge batches — (a, b) pairs of int64 node-id arrays.
+
+    Returns (ids, labels): every node seen, ascending and unique, and the
+    minimum node id of its component. Batches are buffered until they
+    hold as many edges as there are known nodes (at least `min_flush`),
+    then folded into a numpy union-find (_union_edges) over dense indices
+    in id order. The re-index and pointer jumps cost O(nodes) per flush,
+    so that cost is paid once per O(nodes) edges, and memory is O(nodes)
+    plus the buffer, never O(edges): a near-clique of n nodes streams its
+    n² edges through O(n) state. Labels do not depend on how the edges
+    are split into batches."""
+    ids = np.empty(0, dtype=np.int64)
+    parent = np.empty(0, dtype=np.int64)
+    buf_a: list[np.ndarray] = []
+    buf_b: list[np.ndarray] = []
+    n_buf = 0
+
+    def flush(ids, parent):
+        a = np.concatenate(buf_a)
+        b = np.concatenate(buf_b)
+        grown = np.union1d(ids, np.union1d(a, b))
+        if grown.size != ids.size:
+            # old index i moves to pos[i]; order (hence minimality) kept
+            pos = np.searchsorted(grown, ids)
+            p = np.arange(grown.size, dtype=np.int64)
+            p[pos] = pos[parent]
+            ids, parent = grown, p
+        return ids, _union_edges(parent, np.searchsorted(ids, a),
+                                 np.searchsorted(ids, b))
+
+    for a, b in edge_batches:
+        buf_a.append(np.asarray(a, dtype=np.int64))
+        buf_b.append(np.asarray(b, dtype=np.int64))
+        n_buf += buf_a[-1].size
+        if n_buf >= max(ids.size, min_flush):
+            ids, parent = flush(ids, parent)
+            buf_a.clear()
+            buf_b.clear()
+            n_buf = 0
+    if n_buf:
+        ids, parent = flush(ids, parent)
+    return ids, ids[parent]

@@ -9,7 +9,9 @@ subset over plain parquet directories with a JSON manifest per stage:
                  — content-addressed, so resume is a pure manifest lookup:
                  same inputs + same params ⟹ same snapshot ⟹ skip stage.
   lineage      = input snapshot ids (the DAG edge set)
-  metrics      = row count + per-partition row counts (lineage + metrics)
+  metrics      = per-file row counts from the parquet footers, and their
+                 sum as row_count — read driver-side with no Spark job
+                 (Iceberg records per-data-file counts the same way)
 
 The interface is deliberately thin (write_stage / read_stage / is_current)
 so `df.writeTo(tbl).append()` on a real Iceberg catalog is a one-line swap.
@@ -21,7 +23,11 @@ import hashlib
 import json
 import os
 import time
+from urllib.parse import unquote
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,8 +70,9 @@ def is_current(path: str, expected_snapshot: str) -> bool:
 def write_stage(df: DataFrame, path: str, stage: str,
                 input_snapshots: list[str], params_hash: str,
                 partition_by: list[str] | None = None,
-                stats_fn=None) -> str:
-    """Write df as a stage table + manifest; returns the snapshot id."""
+                stats_fn=None) -> tuple[str, DataFrame]:
+    """Write df as a stage table + manifest; returns (snapshot id, the
+    table as read back)."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -77,10 +84,17 @@ def write_stage(df: DataFrame, path: str, stage: str,
 def refresh_manifest(spark: SparkSession, path: str, stage: str,
                      input_snapshots: list[str], params_hash: str,
                      partition_by: list[str] | None = None,
-                     stats_fn=None) -> str:
+                     stats_fn=None) -> tuple[str, DataFrame]:
     """(Re)commit the manifest for data already at `path` — used both by
     write_stage and by incremental dynamic-partition-overwrite commits
-    (the iceberg-lite analogue of an Iceberg snapshot commit).
+    (the iceberg-lite analogue of an Iceberg snapshot commit). Returns
+    (snapshot id, the table as read back): the one read of the stage,
+    which callers use instead of reading it again.
+
+    The schema recorded is the read-back one (hive-partition columns
+    come back with inferred types). Row counts come from the parquet
+    footers of the files that read lists (_file_rows), so a commit runs
+    no counting job.
 
     stats_fn: optional `dict | Callable[[DataFrame, str], dict]` of extra
     JSON-serializable column statistics recorded under manifest["stats"] —
@@ -92,21 +106,16 @@ def refresh_manifest(spark: SparkSession, path: str, stage: str,
     dict is recorded as-is."""
     snap = snapshot_id(stage, input_snapshots, params_hash)
 
-    # per-partition lineage + metrics on the data as written
-    written = spark.read.parquet(path)
-    part_counts = (written
-                   .groupBy(F.spark_partition_id().alias("pid"))
-                   .agg(F.count("*").alias("rows"))
-                   .orderBy("pid")
-                   .collect())
+    written = read_stage(spark, path)
+    files = _file_rows(written, len(partition_by or []))
     manifest = {
         "stage": stage,
         "snapshot_id": snap,
         "inputs": sorted(input_snapshots),
         "params_hash": params_hash,
         "schema": written.schema.jsonValue(),
-        "row_count": int(sum(r["rows"] for r in part_counts)),
-        "partitions": [{"pid": int(r["pid"]), "rows": int(r["rows"])} for r in part_counts],
+        "row_count": sum(f["rows"] for f in files),
+        "files": files,
         "partition_by": partition_by or [],
         "stats": (stats_fn(written, path) if callable(stats_fn)
                   else (stats_fn or {})),
@@ -114,7 +123,29 @@ def refresh_manifest(spark: SparkSession, path: str, stage: str,
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     _write_json_atomic(_manifest_path(path), manifest)
-    return snap
+    return snap, written
+
+
+def _file_rows(table: DataFrame, depth: int) -> list[dict]:
+    """[{file, rows}] for every data file a read of the stage lists
+    (side tables under `_` dirs are hidden from it), file = the path
+    below the stage dir (`depth` hive-partition dirs + file name). Rows
+    come from each file's parquet footer, read driver-side. A store
+    whose URI scheme pyarrow cannot open falls back to one counting job
+    grouped by input file."""
+    def rel(uri: str) -> str:
+        return unquote("/".join(uri.split("/")[-(depth + 1):]))
+
+    try:
+        rows = {}
+        for uri in table.inputFiles():
+            fs, p = pafs.FileSystem.from_uri(uri)
+            rows[rel(uri)] = pq.read_metadata(p, filesystem=fs).num_rows
+    except (pa.ArrowException, OSError):
+        counted = (table.groupBy(F.input_file_name().alias("f"))
+                   .agg(F.count("*").alias("n")).collect())
+        rows = {rel(r["f"]): r["n"] for r in counted}
+    return [{"file": f, "rows": int(n)} for f, n in sorted(rows.items())]
 
 
 def _write_json_atomic(mp: str, payload: dict) -> None:
@@ -222,6 +253,6 @@ def materialize(df: DataFrame, path: str, stage: str,
     snap = snapshot_id(stage, input_snapshots, params_hash)
     if resume and is_current(path, snap):
         return read_stage(df.sparkSession, path), snap
-    write_stage(df, path, stage, input_snapshots, params_hash, partition_by,
-                stats_fn=stats_fn)
-    return read_stage(df.sparkSession, path), snap
+    _, written = write_stage(df, path, stage, input_snapshots, params_hash,
+                             partition_by, stats_fn=stats_fn)
+    return written, snap

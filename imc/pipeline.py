@@ -388,7 +388,7 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
     def overwrite_partitions(name: str, df: DataFrame,
                              stats_fn=None) -> DataFrame:
         """Dynamic-partition-overwrite the affected venue dirs, refresh the
-        manifest (recount), return the full merged table. localCheckpoint
+        manifest, return the full merged table as read back. localCheckpoint
         breaks the read-path↔write-path cycle (a real Iceberg commit makes
         this a metadata swap). Affected venue dirs are DROPPED first:
         dynamic overwrite only replaces partitions PRESENT in df, so a
@@ -402,18 +402,18 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
             _delete_dir(spark, os.path.join(path, f"venue={v}"))
         with _dynamic_overwrite(spark):
             df.write.mode("overwrite").partitionBy("venue").parquet(path)
-        snap = manifest.refresh_manifest(spark, path, name, inputs_of(name),
-                                         ph, partition_by=["venue"],
-                                         stats_fn=stats_fn)
+        snap, written = manifest.refresh_manifest(
+            spark, path, name, inputs_of(name), ph, partition_by=["venue"],
+            stats_fn=stats_fn)
         results[name] = (path, snap)
-        return manifest.read_stage(spark, path)
+        return written
 
     def rewrite(name: str, df: DataFrame) -> DataFrame:
         path = os.path.join(out_dir, name)
         df = df.localCheckpoint(eager=True)
-        snap = manifest.write_stage(df, path, name, inputs_of(name), ph)
+        snap, written = manifest.write_stage(df, path, name, inputs_of(name), ph)
         results[name] = (path, snap)
-        return manifest.read_stage(spark, path)
+        return written
 
     def align(df: DataFrame, like: DataFrame) -> DataFrame:
         return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name)

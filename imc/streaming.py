@@ -49,17 +49,41 @@ def _progress_dicts(q) -> list[dict]:
     return out
 
 
-def _harvest_metrics(q, extra: dict | None = None) -> dict:
+def _next_batch_id(checkpoint_dir: str) -> int:
+    """The batchId the next run over this checkpoint starts at: one past
+    the last COMMITTED batch (a batch whose offsets were logged but not
+    committed is re-run under its own id), 0 for a new checkpoint."""
+    try:
+        done = [int(n) for n in os.listdir(os.path.join(checkpoint_dir,
+                                                        "commits"))
+                if n.isdigit()]
+    except OSError:
+        return 0
+    return max(done) + 1 if done else 0
+
+
+def _harvest_metrics(q, first_batch: int, extra: dict | None = None) -> dict:
     """Counts for one availableNow run from the query's OWN progress
     telemetry (no extra jobs): rows in (source numInputRows), rows out
     (a named `rows_out` observe node riding the sink write — the file
     sink reports numOutputRows as -1/absent, so the parquet-sink ops
     carry their own observation; foreachBatch sinks pass driver-side
     Observation counts via `extra`), and late rows dropped by the
-    watermark (state-store numRowsDroppedByWatermark)."""
+    watermark (state-store numRowsDroppedByWatermark).
+
+    `truncated` is set exactly when progress entries were lost:
+    recentProgress is a ring buffer sized by
+    spark.sql.streaming.numRecentProgressUpdates, so a long run
+    undercounts. The run executed batches first_batch (_next_batch_id
+    before start) through its last batchId; fewer distinct ids retained
+    means some were evicted. A batch-count threshold cannot tell: the
+    buffer may keep fewer entries than its nominal size."""
     rows_in = rows_out = dropped = batches = 0
+    batch_ids = set()
     for p in _progress_dicts(q):
         batches += 1
+        if p.get("batchId") is not None:
+            batch_ids.add(int(p["batchId"]))
         rows_in += int(p.get("numInputRows") or 0)
         om = (p.get("observedMetrics") or {}).get("rows_out")
         # raw sink count, None/negative tested explicitly: an `or -1`
@@ -78,31 +102,20 @@ def _harvest_metrics(q, extra: dict | None = None) -> dict:
             dropped += int(so.get("numRowsDroppedByWatermark") or 0)
     m = {"batches": batches, "rows_in": rows_in, "rows_out": rows_out,
          "late_dropped": dropped}
-    # recentProgress is a ring buffer capped at
-    # spark.sql.streaming.numRecentProgressUpdates (default 100): a run
-    # with more micro-batches than that silently undercounts while
-    # looking authoritative (ADVICE r06) — flag it instead
-    try:
-        from pyspark.sql import SparkSession
-        sess = SparkSession.getActiveSession()
-        cap = int(sess.conf.get(
-            "spark.sql.streaming.numRecentProgressUpdates", "100"))
-    except Exception:
-        cap = 100
-    if batches >= cap:
+    if batch_ids and max(batch_ids) - first_batch + 1 > len(batch_ids):
         m["truncated"] = True
     if extra:
         m.update(extra)
     return m
 
 
-def _record_stream_metrics(out_dir: str, op: str, q,
+def _record_stream_metrics(out_dir: str, op: str, q, first_batch: int,
                            extra: dict | None = None) -> dict:
     """Append this run's metrics to out_dir/_stream_metrics.json
     (atomic tmp+replace, the stage-manifest write rule). One JSON doc
     per sink, a bounded `runs` list entry per availableNow invocation —
     O(runs), never O(rows)."""
-    run = {"run_id": str(q.runId), **_harvest_metrics(q, extra)}
+    run = {"run_id": str(q.runId), **_harvest_metrics(q, first_batch, extra)}
     os.makedirs(out_dir, exist_ok=True)
     mp = os.path.join(out_dir, STREAM_METRICS_NAME)
     try:
@@ -296,13 +309,14 @@ def stream_documents_dedup(spark: SparkSession, input_dir: str,
          .parquet(os.path.join(out_dir, f"batch_id={batch_id}")))
         obs_acc.append((int(obs_in.get["n"]), int(obs.get["n"])))
 
+    first_batch = _next_batch_id(checkpoint_dir)
     q = (stream.writeStream
          .foreachBatch(_fold)
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
-    _record_stream_metrics(out_dir, "documents_dedup", q,
+    _record_stream_metrics(out_dir, "documents_dedup", q, first_batch,
                            {"rows_in": sum(i for i, _ in obs_acc),
                             "rows_out": sum(o for _, o in obs_acc)})
     return q
@@ -535,6 +549,7 @@ def stream_sessionize(spark: SparkSession, input_dir: str, out_dir: str,
     from pyspark.sql import functions as F
     sessions = sessions.observe("rows_out", F.count(F.lit(1)).alias("n"))
 
+    first_batch = _next_batch_id(checkpoint_dir)
     q = (sessions.writeStream.format("parquet")
          .option("path", out_dir)
          .option("checkpointLocation", checkpoint_dir)
@@ -545,7 +560,7 @@ def stream_sessionize(spark: SparkSession, input_dir: str, out_dir: str,
     # sessions emitted = sink numOutputRows; late-dropped from the
     # state store's numRowsDroppedByWatermark — both already in the
     # query progress, zero extra jobs
-    _record_stream_metrics(out_dir, "sessionize", q)
+    _record_stream_metrics(out_dir, "sessionize", q, first_batch)
     return q
 
 
@@ -584,6 +599,7 @@ def stream_window_counts(spark: SparkSession, input_dir: str, out_dir: str,
     # sink reports no numOutputRows)
     agg = agg.observe("rows_out", F.count(F.lit(1)).alias("n"))
 
+    first_batch = _next_batch_id(checkpoint_dir)
     q = (agg.writeStream.format("parquet")
          .option("path", out_dir)
          .option("checkpointLocation", checkpoint_dir)
@@ -591,5 +607,5 @@ def stream_window_counts(spark: SparkSession, input_dir: str, out_dir: str,
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
-    _record_stream_metrics(out_dir, "window_counts", q)
+    _record_stream_metrics(out_dir, "window_counts", q, first_batch)
     return q

@@ -436,7 +436,11 @@ def min_label_components(ids: DataFrame, pairs: DataFrame, id_col: str,
     non-convergence within max_rounds RAISES (silent partial labels
     would leave a cluster with no keeper — its whole membership on the
     purge list); each round persists the new label table and unpersists
-    the superseded one."""
+    the superseded one, so a call leaves two persisted RDDs however
+    many rounds run: the edge checkpoint and the final label table."""
+    # localCheckpoint, not persist: a cached relation keeps the whole
+    # LSH + Jaccard lineage in every plan built on it, which measured
+    # slower and heavier on the heap than the checkpoint it would free
     edges = pairs.unionByName(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
     ).localCheckpoint(eager=True)
@@ -458,7 +462,9 @@ def min_label_components(ids: DataFrame, pairs: DataFrame, id_col: str,
               .join(ids.select(F.col(id_col).alias("_id")), "_id",
                     "left_semi"))  # membership contract unchanged: only
     # ids rows ever appear in the output
-    lbl = pnodes.withColumn("label", F.col("_id")).persist()
+    # `held` is the persisted frame behind lbl: unpersist must target it,
+    # a projection of it is a different plan and unpersists nothing
+    held = lbl = pnodes.withColumn("label", F.col("_id")).persist()
     converged = False
     for _ in range(max_rounds):
         nb = (edges.join(lbl.select(F.col("_id").alias("b_id"),
@@ -472,13 +478,13 @@ def min_label_components(ids: DataFrame, pairs: DataFrame, id_col: str,
                        .alias("label"))
                .persist())
         changed = new.filter("label != _old").count()
-        lbl.unpersist()
-        lbl = new.select("_id", "label")
+        held.unpersist()
+        held, lbl = new, new.select("_id", "label")
         if changed == 0:
             converged = True
             break
     if not converged:
-        new.unpersist()
+        held.unpersist()
         raise RuntimeError(
             f"min_label_components did not converge within {max_rounds} "
             f"label-propagation rounds — a duplicate chain longer than "

@@ -144,3 +144,78 @@ def test_rank_components_two_level_equals_global_order(spark):
     for spec in re.findall(r"row_number\(\) windowspecdefinition\(([^)]*)\)",
                            plan):
         assert "_v" in spec, plan[:3000]
+
+
+def _cross_venue_segments(n_venues=4, trajs=3, per_traj=12, seed=7):
+    """Trajectories of several venues walking ONE shared corridor, so
+    ε-pairs join segments of different venues and every cluster spans
+    venues (seg_id = traj_id·SEG_ID_STRIDE + k, traj_id =
+    venue·VENUE_STRIDE + t — the pipeline's id layout)."""
+    from imc.config import VENUE_STRIDE
+    from imc.segments import SEG_ID_STRIDE
+    rng = np.random.default_rng(seed)
+    rows = []
+    for v in range(n_venues):
+        for t in range(trajs):
+            traj = v * VENUE_STRIDE + t
+            x0 = rng.uniform(0, 1.0)
+            for k in range(per_traj):
+                x1 = x0 + 1.5 * k
+                y = 0.3 * np.sin(x1 / 4) + rng.normal(0, 0.1)
+                rows.append((traj * SEG_ID_STRIDE + k, traj, x1, y,
+                             x1 + 1.5, y + rng.normal(0, 0.1)))
+    return pd.DataFrame(rows, columns=["seg_id", "traj_id", "x1", "y1",
+                                       "x2", "y2"])
+
+
+def test_dbscan_components_spanning_venues_match_oracle(spark, monkeypatch):
+    """ε-pairs that cross venues put one component's edges into several
+    partitions (pairs are keyed by the venue of a_seg). The residual graph
+    of the per-partition labels must be non-empty and its contraction
+    must give the oracle's exact assignments."""
+    pdf = _cross_venue_segments()
+    seg_df = spark.createDataFrame(pdf)
+    pairs = joins.eps_join(seg_df, PARAMS)
+    pairs_pd = pairs.toPandas()
+    stride = 10 ** 9  # SEG_ID_STRIDE × VENUE_STRIDE
+    assert ((pairs_pd["a_seg"] // stride) != (pairs_pd["b_seg"] // stride)).any()
+
+    residual_edges = []
+    real = dbscan._connected_components
+
+    def spy(edges, nodes, *a, **k):
+        residual_edges.append(edges.count())
+        return real(edges, nodes, *a, **k)
+
+    monkeypatch.setattr(dbscan, "_connected_components", spy)
+    # one shuffle partition per venue key: AQE must not coalesce the tiny
+    # venue partitions back into one
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        got = dbscan.dbscan(seg_df, pairs, PARAMS).toPandas()
+    finally:
+        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    assert residual_edges and residual_edges[0] > 0
+
+    want = oracle.dbscan_oracle(
+        pdf["seg_id"].to_numpy(np.int64), pdf["traj_id"].to_numpy(np.int64),
+        pdf[["x1", "y1", "x2", "y2"]].to_numpy(np.float64),
+        PARAMS.eps, PARAMS.min_lns)
+    got_s = got.sort_values("seg_id").reset_index(drop=True)
+    want_s = want.sort_values("seg_id").reset_index(drop=True)
+    types = {"seg_id": "int64", "cluster_id": "int64", "is_core": "bool"}
+    pd.testing.assert_frame_equal(got_s.astype(types), want_s.astype(types))
+    # the check has teeth: some cluster holds segments of several venues
+    venues = (got_s["seg_id"] // stride).groupby(got_s["cluster_id"]).nunique()
+    assert (venues > 1).any()
+
+
+def test_dbscan_persisted_rdds_per_call(spark, fixture_data):
+    """One dbscan call leaves at most 4 persisted RDDs: the ε-pair and
+    core-id checkpoints, the partition-local labels and the (empty)
+    residual edge list. The old per-round loop left 17."""
+    seg_df, pairs = fixture_data
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    dbscan.dbscan(seg_df, pairs, PARAMS).count()
+    assert jsc.getPersistentRDDs().size() - before <= 4

@@ -293,3 +293,97 @@ def test_grid_traverse_batch_equals_scalar():
             got = set(zip(gx[sel].tolist(), gy[sel].tolist()))
             assert got == want, (i, cell)
             assert sel.sum() == len(got)  # no duplicate cells per segment
+
+
+# ---------- component_labels (streaming numpy union-find) ----------
+
+def _uf_labels(node_ids, a, b):
+    """{node id: min id of its component} from fixtures.oracle._UF over
+    dense indices (node_ids ascending, so the min index is the min id)."""
+    from fixtures.oracle import _UF
+    uf = _UF(len(node_ids))
+    for x, y in zip(a.tolist(), b.tolist()):
+        uf.union(x, y)
+    seen = np.unique(np.concatenate([a, b]))
+    return {int(node_ids[i]): int(node_ids[uf.find(int(i))]) for i in seen}
+
+
+def _labels(batches, **kw):
+    ids, labels = kernels.component_labels(batches, **kw)
+    assert np.all(np.diff(ids) > 0)  # ascending, unique
+    return dict(zip(ids.tolist(), labels.tolist()))
+
+
+def _split(a, b, k, rng):
+    """(a, b) cut into k batches at random points, empty batches allowed."""
+    cuts = np.sort(rng.integers(0, a.size + 1, size=k - 1))
+    return list(zip(np.split(a, cuts), np.split(b, cuts)))
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_component_labels_random_graphs_match_union_find(seed):
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(1, 400))
+    m = int(rng.integers(0, 2 * n))
+    a = rng.integers(0, n, m)
+    b = rng.integers(0, n, m)
+    # sparse, unordered node ids, as seg_ids are
+    node_ids = np.sort(rng.choice(10 ** 12, n, replace=False))
+    want = _uf_labels(node_ids, a, b)
+    assert _labels([(node_ids[a], node_ids[b])]) == want
+    assert _labels([(node_ids[b], node_ids[a])]) == want
+
+
+@pytest.mark.parametrize("n_batches", [1, 2, 3, 7, 50, 999])
+def test_component_labels_long_path_any_batching(n_batches):
+    """A 1,000-node path (diameter 999) with shuffled ids and edge order:
+    one component labelled by its min id, whatever the batching and
+    however often the buffer flushes."""
+    rng = np.random.default_rng(n_batches)
+    node_ids = np.sort(rng.choice(10 ** 9, 1000, replace=False))
+    a = np.arange(999)
+    b = a + 1
+    pos = rng.permutation(1000)  # path order ≠ id order
+    order = rng.permutation(999)
+    ea, eb = node_ids[pos[a[order]]], node_ids[pos[b[order]]]
+    want = {int(v): int(node_ids[0]) for v in node_ids}
+    for min_flush in (1, 64, 1 << 16):
+        got = _labels(_split(ea, eb, n_batches, rng), min_flush=min_flush)
+        assert got == want
+
+
+def test_component_labels_clique_and_isolated_nodes():
+    """A 300-node clique (44,850 edges) collapses to one label; nodes
+    joined only by self-loops stay their own component."""
+    ii, jj = np.triu_indices(300, k=1)
+    clique_ids = np.arange(300, dtype=np.int64) * 7 + 1000
+    loops = np.array([5, 9, 10 ** 15], dtype=np.int64)
+    a = np.concatenate([clique_ids[jj], loops])
+    b = np.concatenate([clique_ids[ii], loops])
+    want = {int(v): 1000 for v in clique_ids} | {int(v): int(v) for v in loops}
+    for k in (1, 4, 300):
+        got = _labels(_split(a, b, k, np.random.default_rng(k)), min_flush=97)
+        assert got == want
+
+
+@pytest.mark.parametrize("seed", range(10))
+def test_component_labels_identical_under_any_batch_split(seed):
+    """Labels do not depend on how the edges are cut into batches or when
+    the buffer flushes."""
+    rng = np.random.default_rng(100 + seed)
+    n = 500
+    m = int(rng.integers(100, 700))  # around the giant-component threshold
+    a = rng.integers(0, n, m) * 3
+    b = rng.integers(0, n, m) * 3
+    ref = _labels([(a, b)])
+    for k in (2, 5, 17, m):
+        for min_flush in (1, 33, 1 << 16):
+            assert _labels(_split(a, b, k, rng), min_flush=min_flush) == ref
+
+
+def test_component_labels_empty_input():
+    ids, labels = kernels.component_labels([])
+    assert ids.size == 0 and labels.size == 0
+    ids, labels = kernels.component_labels(
+        [(np.empty(0, np.int64), np.empty(0, np.int64))])
+    assert ids.size == 0 and labels.size == 0

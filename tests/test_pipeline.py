@@ -28,7 +28,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
         assert m["snapshot_id"] == snap
         assert m["committed"]
         assert m["row_count"] > 0, name
-        assert sum(pc["rows"] for pc in m["partitions"]) == m["row_count"]
+        assert sum(f["rows"] for f in m["files"]) == m["row_count"]
 
     # resume: second run with identical inputs+params must skip (manifests
     # unchanged on disk — compare mtimes)
@@ -140,3 +140,75 @@ def test_partitioned_stages_prune(spark, tmp_path):
     ra = pipeline.run(spark, mem, str(tmp_path / "runm"), PARAMS)
     rb = pipeline.run(spark, mem, str(tmp_path / "runm"), PARAMS)
     assert ra["points"][1] != rb["points"][1]
+
+
+def _assert_manifests_exact(spark, results):
+    """Every stage's footer-derived row_count and per-file rows equal a
+    real count of the table; the files are the table's data files (the
+    segments `_venue_stats` side table is not counted)."""
+    for name, (p, _) in results.items():
+        m = manifest.read_manifest(p)
+        n = spark.read.parquet(p).count()
+        assert m["row_count"] == n, name
+        assert sum(f["rows"] for f in m["files"]) == n, name
+        for f in m["files"]:
+            assert os.path.isfile(os.path.join(p, f["file"])), (name, f)
+            assert not f["file"].startswith("_"), (name, f)
+            if m["partition_by"]:
+                assert f["file"].startswith("venue="), (name, f)
+        assert m["schema"] == spark.read.parquet(p).schema.jsonValue(), name
+    seg = results["segments"][0]
+    assert os.path.isdir(os.path.join(seg, manifest.VENUE_STATS_DIR))
+
+
+@pytest.mark.usefixtures("spark")
+def test_manifest_counts_exact_after_run_and_incremental(spark, tmp_path):
+    """Manifest commits take row counts from parquet footers instead of
+    recounting: they must stay exact for every stage, venue-partitioned
+    or not, after a full run and after an incremental fold (dynamic
+    partition overwrite leaves old and new files side by side)."""
+    from pyspark.sql import functions as F
+
+    from imc.extract import dedupe_pages
+    pages = spark.read.parquet(gen_pages.ensure_pages(sf=0.001))
+    slot = F.regexp_extract("url", r"walk(\d+)$", 1).cast("int")
+    new_batch = dedupe_pages(pages).filter(slot >= 40)
+    old_batch = pages.join(new_batch.select("url", "warc_ts"),
+                           ["url", "warc_ts"], "left_anti")
+    out = str(tmp_path / "exact")
+    results = pipeline.run(spark, old_batch, out, PARAMS)
+    _assert_manifests_exact(spark, results)
+    folded = pipeline.run_incremental(spark, new_batch, out, PARAMS)
+    assert set(folded) == set(results)
+    assert any(folded[n][1] != results[n][1] for n in results)
+    _assert_manifests_exact(spark, folded)
+
+
+@pytest.mark.usefixtures("spark")
+def test_manifest_file_rows_fallback_counts_when_pyarrow_cannot_open(
+        spark, tmp_path, monkeypatch):
+    """A store whose URI scheme pyarrow cannot open (e.g. s3a://) falls
+    back to one counting job grouped by input file: same files, same
+    rows as the footer path."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+
+    df = spark.range(1000).selectExpr("id", "id % 3 AS venue")
+    path = str(tmp_path / "t")
+    manifest.write_stage(df, path, "t", [], "p", partition_by=["venue"])
+    footer = manifest.read_manifest(path)
+
+    def _refuse(uri):
+        raise pa.ArrowInvalid(f"Unrecognized filesystem type in URI: {uri}")
+
+    monkeypatch.setattr(manifest, "pafs", SimpleNamespace(
+        FileSystem=SimpleNamespace(from_uri=_refuse)))
+    snap, table = manifest.refresh_manifest(spark, path, "t", [], "p",
+                                            partition_by=["venue"])
+    counted = manifest.read_manifest(path)
+    assert snap == footer["snapshot_id"] and table.count() == 1000
+    assert counted["files"] == footer["files"]
+    assert counted["row_count"] == footer["row_count"] == 1000
+    assert {f["file"].split("/")[0] for f in counted["files"]} == {
+        "venue=0", "venue=1", "venue=2"}

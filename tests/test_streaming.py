@@ -467,3 +467,42 @@ def test_event_time_ops_refuse_non_utc_session(spark, tmp_path):
                    str(tmp_path / "ck"))
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz0)
+
+
+def test_stream_metrics_truncated_only_when_progress_lost(spark, tmp_path):
+    """recentProgress is a ring buffer sized by numRecentProgressUpdates,
+    so a long run's progress (and its batch count) is incomplete. The
+    flag must be set exactly when batches of the run are missing from
+    it — not from a batch-count threshold, which misses real loss when
+    the buffer keeps fewer entries than its nominal size."""
+    import json
+
+    def land(name, i):
+        pdf = pd.DataFrame([(i, f"text {i}", "en", "s", 6)],
+                           columns=["doc_id", "text", "lang", "source",
+                                    "n_chars"])
+        staged = str(tmp_path / ("stage_" + name))
+        spark.createDataFrame(pdf).coalesce(1).write.parquet(staged)
+        part = [f for f in os.listdir(staged) if f.endswith(".parquet")][0]
+        shutil.copy(os.path.join(staged, part), os.path.join(in_dir, name))
+
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    ck_dir = str(tmp_path / "ck")
+    os.makedirs(in_dir)
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    spark.conf.set(key, "3")
+    try:
+        for n_files, tag in ((2, "a"), (3, "b")):
+            for i in range(n_files):
+                land(f"{tag}{i}.parquet", len(os.listdir(in_dir)))
+            streaming.stream_documents_dedup(spark, in_dir, out_dir, ck_dir,
+                                             max_files_per_trigger=1)
+    finally:
+        spark.conf.unset(key)
+    with open(os.path.join(out_dir, streaming.STREAM_METRICS_NAME)) as f:
+        runs = json.load(f)["runs"]
+    # one file per micro-batch: 2 batches, then 3 (batch ids 0-1, 2-4)
+    assert sorted(os.listdir(os.path.join(ck_dir, "commits")))[-1] == "4"
+    assert runs[0]["batches"] == 2 and "truncated" not in runs[0]
+    assert runs[1]["batches"] < 3 and runs[1].get("truncated") is True

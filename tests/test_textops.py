@@ -248,6 +248,27 @@ def test_dedup_clusters_chain_transitivity(spark):
     assert set(out["cluster_id"]) <= {1}
 
 
+def test_dedup_clusters_multi_round_leaves_two_persisted_rdds(spark):
+    """A 6-doc near-dup chain takes several propagation rounds; every
+    superseded label table must be released, so however many rounds run
+    the call leaves two persisted RDDs: the edge checkpoint and the final
+    label table the returned frame reads."""
+    words = ["w%d" % i for i in range(100)]
+    chain = [" ".join(words[5 * k:5 * k + 60]) for k in range(6)]
+    pdf = pd.DataFrame([(k + 1, t, "en", "s", 0) for k, t in enumerate(chain)],
+                       columns=["doc_id", "text", "lang", "source", "n_chars"])
+    docs = spark.createDataFrame(pdf)
+    pairs = textops.ngram_jaccard_pairs(docs, threshold=0.8).toPandas()
+    # neighbours only: a path, so labels need one round per hop
+    assert sorted(zip(pairs["a_id"], pairs["b_id"])) == [
+        (k, k + 1) for k in range(1, 6)]
+    jrdds = spark.sparkContext._jsc
+    before = jrdds.getPersistentRDDs().size()
+    out = textops.dedup_clusters(docs, threshold=0.8).toPandas()
+    assert jrdds.getPersistentRDDs().size() - before <= 2
+    assert set(out["cluster_id"]) == {1} and len(out) == 6
+
+
 def test_train_split_deterministic_and_proportioned(spark, docs):
     out1 = textops.train_split(docs, 10, 10).toPandas()
     out2 = textops.train_split(docs, 10, 10).toPandas()
